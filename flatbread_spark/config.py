@@ -86,7 +86,9 @@ DEFAULTS_STATIC: dict[str, Any] = {
     # engine knobs (no reference equivalent — Spark-side scale policy)
     "engine": {
         # from_df(pos_strategy="auto"): frames larger than this get ranged
-        # (two-phase) __pos__ assignment instead of a single-task window
+        # (two-phase) __pos__ assignment instead of a single-task window.
+        # Also the row bound up to which a FlatFrame is anchored as a local
+        # relation after each op (FlatFrame._anchor). 0 disables both.
         "pos_auto_threshold": 100_000,
         # embedding_dup_pairs with no candidate-generation key refuses the
         # all-pairs join above this row count (0 disables the guard)

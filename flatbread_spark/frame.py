@@ -25,9 +25,14 @@ no attrs. ``FlatFrame`` supplies all three on top of a plain ``pyspark.sql.DataF
 
 Scale notes: a FlatFrame is a *presentation-shaped* table (a pivot output —
 cardinality = number of groups), but all construction paths (``pivot_table``)
-consume arbitrarily large inputs through shuffle-based groupBy. Nothing here
-collects to the driver; margins are unions of small aggregate DataFrames that
-Spark broadcasts implicitly.
+consume arbitrarily large inputs through shuffle-based groupBy. Margins are
+unions of small aggregate DataFrames. Every op that produces a new ``df``
+*anchors* the result (:meth:`FlatFrame._anchor`): one bounded Arrow collect of
+at most ``engine.pos_auto_threshold`` + 1 rows (fewer for a wide frame: at most
+``_ANCHOR_MAX_CELLS`` cells), re-entered as a local relation, so a chain of
+margin ops stays linear in plan size and work instead of re-reading the whole
+lineage per op. Frames above the bound (and streaming frames) stay lazy and
+are never collected past the bound.
 """
 from __future__ import annotations
 
@@ -108,6 +113,21 @@ def keep_predicate(col: Column, ignore_keys: Sequence[str]) -> Column:
     return ~F.coalesce(reduce(or_, conds), F.lit(False))
 
 
+def _presentation_bound() -> int:
+    """``engine.pos_auto_threshold``: the row count up to which a frame is
+    presentation-sized (window ``__pos__``, anchored as a local relation);
+    <= 0 disables both probes."""
+    from flatbread_spark.config import CONFIG
+
+    return int(CONFIG.get("engine", "pos_auto_threshold", default=100_000))
+
+
+# most cells (rows x columns) an anchor pulls into the driver: a frame
+# under the row threshold but wide (a pivot with thousands of value
+# columns) stays lazy instead of being held as a driver-side local table
+_ANCHOR_MAX_CELLS = 1_000_000
+
+
 def _sanitize(name: str) -> str:
     out = re.sub(r"[^0-9A-Za-z_]+", "_", str(name)).strip("_")
     return out or "c"
@@ -179,6 +199,12 @@ class FlatFrame:
     def value_names(self) -> list[str]:
         return [c.name for c in self.cols]
 
+    # set once an anchor probe found the frame above the bound, and sticky:
+    # later ops skip the probe instead of re-collecting bound + 1 rows per
+    # op. An op that drops rows (drop_totals) can bring a frame back under
+    # the bound; it then stays lazy, which costs plan size, never correctness.
+    _over_bound = False
+
     def _copy(self, **over) -> "FlatFrame":
         kw = dict(
             df=self.df, index=self.index, cols=self.cols,
@@ -187,7 +213,37 @@ class FlatFrame:
             pos_ranged=self.pos_ranged,
         )
         kw.update(over)
-        return FlatFrame(**kw)
+        out = FlatFrame(**kw)
+        out._over_bound = self._over_bound
+        if out.df is not self.df:
+            out._anchor()
+        return out
+
+    def _anchor(self) -> None:
+        """Materialize a presentation-sized frame and re-enter it as a local
+        relation, so the next op, the collect and the render read a few rows
+        of driver-held data instead of re-running the whole margin chain
+        (each op reads its input several times, so an un-anchored chain's
+        plan grows geometrically with its depth).
+
+        One bounded Arrow collect of at most ``bound`` + 1 rows, where
+        ``bound`` is ``engine.pos_auto_threshold`` rows, lowered so that
+        rows x columns stays within ``_ANCHOR_MAX_CELLS``; the rows re-enter
+        with the collected schema verbatim (``LocalTableScan``; types,
+        nullability, NaN and -0.0 unchanged). A frame above the bound keeps
+        its lazy plan untouched — it is never truncated. Streaming frames,
+        ``pos_ranged`` frames (probed large at construction) and a threshold
+        <= 0 skip the anchor."""
+        if self._over_bound or self.pos_ranged or self.df.isStreaming:
+            return
+        bound = min(_presentation_bound(), _ANCHOR_MAX_CELLS // len(self.df.columns))
+        if bound <= 0:
+            return
+        table = self.df.limit(bound + 1).toArrow()
+        if table.num_rows > bound:
+            self._over_bound = True
+            return
+        self.df = self.df.sparkSession.createDataFrame(table, schema=self.df.schema)
 
     # ------------------------------------------------------------- construction
     @classmethod
@@ -247,13 +303,11 @@ class FlatFrame:
                     pos_strategy = "window"  # no eager probe on a stream
                 else:
                     from flatbread_spark.cache import pin
-                    from flatbread_spark.config import CONFIG
 
-                    threshold = int(
-                        CONFIG.get("engine", "pos_auto_threshold", default=100_000)
-                    )
+                    threshold = _presentation_bound()
                     if threshold <= 0:
-                        # probe disabled (benchmark / known-small deployments)
+                        # probe disabled (benchmark / known-small
+                        # deployments); this also disables the anchor
                         pos_strategy = "window"
                     else:
                         if not src_persisted:

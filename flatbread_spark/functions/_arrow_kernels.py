@@ -66,8 +66,8 @@ def make_simhash_udf(nbits: int):
     Arrow batch unpacks the hash bits in numpy (two's-complement uint64 view,
     identical to Spark's shiftrightunsigned) and votes vectorized.
 
-    Returns a pandas UDF: array<bigint> -> bigint (bit i set iff vote > 0,
-    matching ``_votes_to_sig`` exactly, including the nbits=64 sign bit).
+    Returns a pandas UDF: array<bigint> -> bigint (bit i set iff vote > 0;
+    for nbits=64, bit 63 is the sign bit).
     """
     shifts = np.arange(nbits, dtype=np.uint64)
 

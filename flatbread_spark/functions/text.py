@@ -426,12 +426,6 @@ def fingerprint_md5(text: Column) -> Column:
     return F.md5(text)
 
 
-def fingerprint64(text: Column) -> Column:
-    """64-bit content fingerprint via xxhash64 (Spark-native, fast path for
-    exact dedup at scale; not SQL-oracle-portable — use md5 for parity runs)."""
-    return F.xxhash64(text)
-
-
 def word_shingles(text: Column, n: int = 4) -> Column:
     """Distinct word-level n-gram shingles (``array<string>``) — the input to
     Jaccard/MinHash near-dup. Word-level keeps shingle cardinality bounded on
@@ -522,12 +516,6 @@ def normalize_text(text: Column) -> Column:
     # btrim's second arg is ColumnOrName — a bare str would be read as a
     # column NAME, so the trim set must be an explicit literal
     return F.btrim(t, F.lit(" \n"))
-
-
-def with_normalized(df, text_col: str, out_col: str | None = None):
-    """Apply :func:`normalize_text`, replacing ``text_col`` in place unless
-    ``out_col`` names a new column."""
-    return df.withColumn(out_col or text_col, normalize_text(F.col(text_col)))
 
 
 # html entity decode pairs, applied AFTER tag removal (decode-last cannot

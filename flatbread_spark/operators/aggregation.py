@@ -18,6 +18,12 @@ Spark-first design (NOT a port):
   rows inside their group without renumbering anything (see
   ``FlatFrame.next_eps``). The reference gets this for free from eager
   list-order concat (``aggregation.py:200-203``).
+- Plan size: an op reads its input three times (union, margin aggregate,
+  placement ``max(__pos__)``), so a lazy chain of k ops plans ~3^k copies
+  of the pivot. Each op's result is anchored as a local relation
+  (``FlatFrame._anchor``), so on a presentation-sized frame the next op
+  reads a few local rows and chains stay linear; only a frame above
+  ``engine.pos_auto_threshold`` keeps the geometric lazy plan.
 - Callable aggfuncs run as Arrow-batched grouped-map pandas UDFs
   (``applyInPandas``) — the engine's UDAF story; string aggfuncs stay JVM-side.
 """

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from flatbread_spark.cache import pin
-from flatbread_spark.functions.text import fingerprint_md5, with_shingles, word_shingles
+from flatbread_spark.functions.text import fingerprint_md5, with_shingles
 from flatbread_spark.functions.vectors import cosine_exact
 
 
@@ -710,46 +710,6 @@ def minhash_lsh_pairs(
         cands = cands.unionByName(star)
     cands = cands.dropDuplicates(["id_a", "id_b"])
     return _verify_jaccard(cands, base, base, threshold)
-
-
-def simhash64(text: Column, n: int = 2) -> Column:
-    """64-bit SimHash over word n-gram shingles: each shingle's xxhash64
-    votes ±1 per bit; the signature is the sign vector. Single aggregate pass
-    with a 64-vote array accumulator (one traversal of the shingle array, not
-    64 — the naive per-bit formulation generates 64 independent aggregates
-    and falls out of any reasonable expression budget)."""
-    sh = word_shingles(text, n)
-    bit_idx = F.sequence(F.lit(0), F.lit(63))
-    votes = F.aggregate(
-        sh,
-        F.array_repeat(F.lit(0), 64),
-        lambda acc, s: F.zip_with(
-            acc,
-            F.transform(
-                bit_idx,
-                lambda i: F.shiftrightunsigned(F.xxhash64(s), i)
-                .bitwiseAND(F.lit(1))
-                .cast("int"),
-            ),
-            lambda a, bit: a + bit * 2 - 1,
-        ),
-    )
-    return _votes_to_sig(votes)
-
-
-def _votes_to_sig(votes: Column, nbits: int = 64) -> Column:
-    """array<int> of bit votes → bigint signature (bit i set iff vote>0).
-    For nbits=64, bit 63 is the sign bit: adding -(2^63) sets it without
-    overflow; narrower signatures (the portable 60-bit md5 variant) stay
-    positive."""
-    sig = F.lit(0).cast("bigint")
-    for i in range(min(nbits, 63)):
-        sig = sig + F.when(F.element_at(votes, i + 1) > 0, F.lit(1 << i).cast("bigint")).otherwise(0)
-    if nbits < 64:
-        return sig
-    return sig + F.when(
-        F.element_at(votes, 64) > 0, F.lit(-(1 << 63)).cast("bigint")
-    ).otherwise(0)
 
 
 def simhash_signatures(

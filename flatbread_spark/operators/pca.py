@@ -146,22 +146,23 @@ def _covariance_with_pin(
         rows = agg.collect()
     n_dec = next(r["s"] for r in rows if r["i"] == -1 and r["j"] == -1)
     mean_dec = {r["i"]: r["s"] for r in rows if r["i"] >= 0 and r["j"] == -1}
-    prods = [(r["i"], r["j"], r["s"]) for r in rows if r["j"] >= 0]
-    spark = df.sparkSession
-    pdf = spark.createDataFrame(prods, "i int, j int, s decimal(28,12)")
+    # re-enter with the COLLECTED schema: the sum of decimal(28,12) partials
+    # is decimal(38,12), and re-typing it narrower overflows sums past 16
+    # integer digits
+    s_type = agg.schema["s"].dataType
+    pdf = df.sparkSession.createDataFrame(
+        [r for r in rows if r["j"] >= 0], schema=agg.schema
+    )
     # decimal literals cast to double IN THE JVM — the identical
     # Decimal.toDouble the old plan applied to the same decimal sums
     mean_map = F.create_map(
         *[
             x
             for k in sorted(mean_dec)
-            for x in (
-                F.lit(k),
-                F.lit(mean_dec[k]).cast("decimal(28,12)"),
-            )
+            for x in (F.lit(k), F.lit(mean_dec[k]).cast(s_type))
         ]
     )
-    n_col = F.lit(n_dec).cast("decimal(28,12)").cast("double")
+    n_col = F.lit(n_dec).cast(s_type).cast("double")
     out = pdf.select(
         "i",
         "j",

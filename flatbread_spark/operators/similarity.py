@@ -145,15 +145,6 @@ def _hyperplanes(dim: int, nbits: int, seed: int) -> list[list[float]]:
     return planes
 
 
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-LSH bucket id: bit i = sign(vec · plane_i). Expression-only."""
-    bucket = F.lit(0).cast("bigint")
-    for i, p in enumerate(planes):
-        d = dot_fast(vec, F.array(*[F.lit(x) for x in p]).cast("array<float>"))
-        bucket = bucket + F.when(d > 0, F.lit(1 << i).cast("bigint")).otherwise(0)
-    return bucket
-
-
 def knn_lsh(
     corpus: DataFrame,
     queries: DataFrame,

@@ -18,6 +18,15 @@ construction DRAINS a stream (the replay harnesses) are excluded because
 their batch result plan is a trivial LocalTableScan with no structure to
 pin.
 
+A second section, ``lazy``, pins the plans with the FlatFrame anchor off
+(``engine.pos_auto_threshold`` = 0): the margin-chain plans a frame above
+the threshold keeps (``from_df``'s size probe is skipped too, so these are
+not the pre-anchor facts). Under the anchor every presentation-sized
+FlatFrame result plans as a bare ``LocalTableScan``, which would hide a
+margin op that reads its input once more or adds a nested-loop join. The
+section records only the queries whose lazy facts differ from their
+anchored ones.
+
 Regenerate DELIBERATELY after a plan-shape change you intend:
 
     python scripts/plan_audit.py --write-golden
@@ -108,8 +117,27 @@ def collect_streaming_fingerprints(
     return out
 
 
-def collect_fingerprints(spark, verbose: bool = False) -> dict[str, dict[str, int]]:
-    """Plan facts for every declared non-streaming query under GOLDEN_ENV.
+def collect_lazy_fingerprints(
+    spark, only=None, verbose: bool = False
+) -> dict[str, dict[str, int]]:
+    """:func:`collect_fingerprints` with the FlatFrame anchor off
+    (``engine.pos_auto_threshold`` = 0, which also skips ``from_df``'s size
+    probe), restoring the threshold afterwards."""
+    from flatbread_spark.config import CONFIG
+
+    before = CONFIG.get("engine", "pos_auto_threshold", default=100_000)
+    CONFIG.update_runtime({"engine": {"pos_auto_threshold": 0}})
+    try:
+        return collect_fingerprints(spark, only=only, verbose=verbose)
+    finally:
+        CONFIG.update_runtime({"engine": {"pos_auto_threshold": before}})
+
+
+def collect_fingerprints(
+    spark, only=None, verbose: bool = False
+) -> dict[str, dict[str, int]]:
+    """Plan facts for every declared non-streaming query (or those named in
+    ``only``) under GOLDEN_ENV.
 
     The caller is responsible for providing a session whose master /
     shuffle-partition config matches ``GOLDEN_ENV`` — fingerprints taken
@@ -124,7 +152,7 @@ def collect_fingerprints(spark, verbose: bool = False) -> dict[str, dict[str, in
 
     out: dict[str, dict[str, int]] = {}
     for name, fn in _entry.queries().items():
-        if name in SKIP:
+        if name in SKIP or (only is not None and name not in only):
             continue
         # Scoped cache-state reset, not just clearCache(): the entry module
         # memoizes the shared bruteforce baseline (_BF_CACHE) as an

@@ -45,14 +45,17 @@ def pivot_table(
     index/columns/values are column names of ``df``; ``aggfunc`` is a named
     aggregate (JVM built-in — see ``flatbread_spark.aggfuncs``).
 
-    ``persist`` (default on) caches the pivot output. This is THE scale
-    decision of the margin pipeline: every margin/percentage op references
-    the pivot result from two or more plan branches (data + aggregate), and
-    without a persist each branch re-derives it from the fact-table scan —
-    a chained totals+percentages plan was measured re-scanning the fact
-    table 3×. The pivot boundary is exactly where cardinality collapses from
-    fact-scale to presentation-scale (#groups), so the cache is KB-sized
-    while the savings are full scans+shuffles of the input.
+    ``persist`` (default on) caches the pivot output. The pivot is read
+    several times before the first margin op's result is anchored as a
+    local relation (``FlatFrame._anchor``): the ``from_df`` size probe, the
+    ``__pos__`` window, and the first op's plan branches (data, margin
+    aggregate, placement ``max(__pos__)``). Without a persist each of those re-derives the pivot from
+    the fact-table scan. Later ops in the chain read the anchored rows, not
+    this cache, except on a frame above ``engine.pos_auto_threshold``, which
+    stays lazy and keeps reading the cache from every branch. The pivot
+    boundary is exactly where cardinality collapses from fact-scale to
+    presentation-scale (#groups), so the cache is KB-sized while the savings
+    are full scans+shuffles of the input.
     """
     index = [index] if isinstance(index, str) else list(index)
     columns = (

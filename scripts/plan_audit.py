@@ -13,7 +13,9 @@ diffs (VERDICT r6 #2: an edit that adds a shuffle, drops a broadcast, or
 widens the Python boundary fails CI mechanically instead of waiting for a
 bench read). Generation MUST match the test-session config, so the golden
 is always produced under ``flatbread_spark.plans.golden.GOLDEN_ENV``
-(local[4], 4 shuffle partitions, sf0.001) regardless of CLI args.
+(local[4], 4 shuffle partitions, sf0.001) regardless of CLI args. Its
+``lazy`` section holds the queries whose facts differ with the FlatFrame
+anchor off (``engine.pos_auto_threshold`` = 0), with those lazy facts.
 
 ``--write-golden`` deliberately does NOT regenerate ``scan_budgets.json``
 (the per-query scan-count ratchet, VERDICT r9 #3): a regenerated golden
@@ -34,6 +36,7 @@ from flatbread_spark.plans.golden import (  # noqa: E402
     GOLDEN_ENV,
     GOLDEN_PATH,
     collect_fingerprints,
+    collect_lazy_fingerprints,
     collect_streaming_fingerprints,
 )
 from flatbread_spark.session import get_spark  # noqa: E402
@@ -47,18 +50,24 @@ def write_golden() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     fingerprints = collect_fingerprints(spark, verbose=True)
+    lazy = {
+        name: facts
+        for name, facts in collect_lazy_fingerprints(spark).items()
+        if facts != fingerprints[name]
+    }
     streaming = collect_streaming_fingerprints(spark, verbose=True)
     payload = {
         "env": GOLDEN_ENV,
         "fingerprints": fingerprints,
+        "lazy": lazy,
         "streaming": streaming,
     }
     with open(GOLDEN_PATH, "w") as f:
         json.dump(payload, f, indent=1, sort_keys=True)
         f.write("\n")
     print(
-        f"wrote {len(fingerprints)} batch + {len(streaming)} streaming "
-        f"fingerprints to {GOLDEN_PATH}"
+        f"wrote {len(fingerprints)} batch + {len(lazy)} lazy + "
+        f"{len(streaming)} streaming fingerprints to {GOLDEN_PATH}"
     )
 
 

@@ -1,10 +1,10 @@
 """Mechanical enforcement of the bounded-collect audit (round 10).
 
-Every `.collect()` / `.toPandas()` in package source pulls a DataFrame to
-the driver — at 100 TB that is only safe when the frame is bounded by the
-MODEL or the GROUP STRUCTURE, never the corpus. VERDICT r8/r9 verified
-this by hand ("all 20 collect sites are bounded"); this test turns the
-manual audit into a ratchet, the same discipline as
+Every `.collect()` / `.toPandas()` / `.toArrow()` in package source pulls
+a DataFrame to the driver — at 100 TB that is only safe when the frame is
+bounded by the MODEL or the GROUP STRUCTURE, never the corpus. VERDICT
+r8/r9 verified this by hand ("all 20 collect sites are bounded"); this
+test turns the manual audit into a ratchet, the same discipline as
 ``tests/test_scan_budgets.py`` for scan counts and
 ``tests/test_filter_audit.py`` for expensive filters: a NEW driver-side
 materialization anywhere in ``flatbread_spark/`` fails by file name until
@@ -15,11 +15,12 @@ Counts (not line numbers) so ordinary refactors don't churn the test; the
 per-file bound notes are the audit trail.
 
 Counting is AST-based (ADVICE r11): a ``Call`` whose func is an
-``Attribute`` named ``collect``/``toPandas``. Substring counting both
-missed sites (``.collect(`` after a ``#`` inside a string literal) and
-counted phantom ones (``.collect(`` mentioned in a docstring), so the
-ratchet could drift for non-code reasons; the AST sees only real call
-sites and makes comment-stripping unnecessary.
+``Attribute`` named ``collect``/``toPandas``/``toArrow`` (an Arrow
+collect is as much a driver materialization as the other two). Substring
+counting both missed sites (``.collect(`` after a ``#`` inside a string
+literal) and counted phantom ones (``.collect(`` mentioned in a
+docstring), so the ratchet could drift for non-code reasons; the AST sees
+only real call sites and makes comment-stripping unnecessary.
 """
 import ast
 import os
@@ -47,10 +48,14 @@ COLLECT_ALLOWLIST = {
 TOPANDAS_ALLOWLIST = {
     "frame.py": (1, "FlatFrame.to_pandas(): presentation sink for margin tables, documented driver-sized"),
 }
+TOARROW_ALLOWLIST = {
+    "frame.py": (1, "FlatFrame._anchor(): df.limit(bound + 1).toArrow(), <= engine.pos_auto_threshold + 1 rows and <= _ANCHOR_MAX_CELLS // ncols + 1 rows; a frame over the bound is dropped on the driver and stays lazy"),
+}
 
 _CALL = {
     "collect": COLLECT_ALLOWLIST,
     "toPandas": TOPANDAS_ALLOWLIST,
+    "toArrow": TOARROW_ALLOWLIST,
 }
 
 

@@ -18,8 +18,24 @@ from flatbread_spark.plans.golden import (
     SKIP,
     STREAM_SINKS,
     collect_fingerprints,
+    collect_lazy_fingerprints,
     collect_streaming_fingerprints,
 )
+
+
+def _drift(golden, got, names):
+    """``name: {fact: (golden, current)}`` lines for every query in
+    ``names`` whose facts moved."""
+    diffs = []
+    for name in sorted(names):
+        if got[name] != golden[name]:
+            changed = {
+                k: (golden[name].get(k), got[name].get(k))
+                for k in set(golden[name]) | set(got[name])
+                if golden[name].get(k) != got[name].get(k)
+            }
+            diffs.append(f"{name}: {changed}")
+    return diffs
 
 
 @pytest.fixture(scope="module")
@@ -51,15 +67,7 @@ def test_plan_fingerprints_match_golden(spark, golden):
     declared = {n for n in e.queries() if n not in SKIP}
     missing = declared - set(golden)
     stale = set(golden) - declared
-    diffs = []
-    for name in sorted(declared & set(golden)):
-        if got[name] != golden[name]:
-            changed = {
-                k: (golden[name].get(k), got[name].get(k))
-                for k in set(golden[name]) | set(got[name])
-                if golden[name].get(k) != got[name].get(k)
-            }
-            diffs.append(f"{name}: {changed}")
+    diffs = _drift(golden, got, declared & set(golden))
     msg = []
     if missing:
         msg.append(f"queries missing from golden (regenerate): {sorted(missing)}")
@@ -82,15 +90,28 @@ def test_streaming_plan_fingerprints_match_golden(spark, payload):
     )
     assert set(golden) == set(STREAM_SINKS)
     got = collect_streaming_fingerprints(spark)
-    diffs = []
-    for name in sorted(STREAM_SINKS):
-        if got[name] != golden[name]:
-            changed = {
-                k: (golden[name].get(k), got[name].get(k))
-                for k in set(golden[name]) | set(got[name])
-                if golden[name].get(k) != got[name].get(k)
-            }
-            diffs.append(f"{name}: {changed}")
+    diffs = _drift(golden, got, STREAM_SINKS)
     assert not diffs, (
         "streaming plan-shape drift (golden, current):\n  " + "\n  ".join(diffs)
+    )
+
+
+def test_lazy_plan_fingerprints_match_golden(spark, payload):
+    """With the FlatFrame anchor off (``engine.pos_auto_threshold`` = 0:
+    the margin-chain plans a frame above the threshold keeps), the queries
+    recorded in the golden's ``lazy`` section must plan exactly as
+    recorded. Anchored, those queries plan as a bare LocalTableScan, so a
+    margin op that reads its input once more or adds a nested-loop join
+    only shows here."""
+    golden = payload.get("lazy")
+    assert golden, (
+        "plans_golden.json has no lazy section; regenerate with "
+        "scripts/plan_audit.py --write-golden"
+    )
+    assert set(golden) <= set(payload["fingerprints"])
+    got = collect_lazy_fingerprints(spark, only=set(golden))
+    diffs = _drift(golden, got, golden)
+    assert not diffs, (
+        "lazy (anchor off) plan-shape drift (golden, current):\n  "
+        + "\n  ".join(diffs)
     )

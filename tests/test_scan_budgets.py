@@ -15,6 +15,10 @@ scan-count budget in ``scan_budgets.json``, which ``plan_audit.py
 
 Equality (not <=) is intentional: a decrease is an improvement worth
 locking in, so a stale too-high budget also fails until lowered.
+
+``lazy_budgets`` does the same for the golden's ``lazy`` section: the
+FlatFrame queries planned with the anchor off, i.e. the plans a frame
+above ``engine.pos_auto_threshold`` keeps.
 """
 import json
 import os
@@ -61,4 +65,25 @@ def test_scan_counts_match_budgets_exactly():
     assert not under, (
         "scan count fell below budget — lock the improvement in by "
         f"lowering scan_budgets.json {{name: (budget, got)}}: {under}"
+    )
+
+
+def test_lazy_scan_counts_match_budgets_exactly():
+    with open(os.path.join(REPO, "plans_golden.json")) as f:
+        lazy = json.load(f)["lazy"]
+    with open(os.path.join(REPO, "scan_budgets.json")) as f:
+        budgets = json.load(f)["lazy_budgets"]
+    assert set(lazy) == set(budgets), (
+        "lazy golden queries and lazy_budgets differ: "
+        f"unbudgeted {sorted(set(lazy) - set(budgets))}, "
+        f"stale {sorted(set(budgets) - set(lazy))}"
+    )
+    moved = {
+        n: (budgets[n], lazy[n]["scans"])
+        for n in sorted(lazy)
+        if lazy[n]["scans"] != budgets[n]
+    }
+    assert not moved, (
+        "lazy scan count differs from its committed budget (justify a rise, "
+        f"lock in a fall) {{name: (budget, got)}}: {moved}"
     )
